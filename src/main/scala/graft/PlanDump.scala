@@ -17,7 +17,7 @@ object PlanDump {
         Relational.q5RegionRevenue(t),
       "q3_bucketed (zero shuffle exchanges: join AND groupBy ride the bucket partitioning)" ->
         Relational.q3Bucketed(t),
-      "word_stats (one shuffle on doc_id serves count+unique, co-partitioned join)" ->
+      "word_stats (per-row array count + distinct; the output sort is the only shuffle)" ->
         WordPipeline.wordStats(t),
       "dedup_minhash_lsh (wide signature, band self-join on digest keys)" ->
         Dedup.minhashLshPairs(t),

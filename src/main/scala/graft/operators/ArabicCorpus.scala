@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.sources.TextFiles
 
 /** The reference's own use case end-to-end: Arabic word statistics
-  * over its sample corpus (/root/reference/sample_data — read-only
-  * input). Mirrors v2/main.py's flagship pipeline with the Arabic
-  * tokenizer (v2/arabic_transformers.py:6) on real Arabic text.
+  * over a directory tree of `.txt` files (`dir`; [[SampleDir]] is the
+  * reference's sample corpus and is only a default). Mirrors
+  * v2/main.py's flagship pipeline with the Arabic tokenizer
+  * (v2/arabic_transformers.py:6) on real Arabic text.
   */
 object ArabicCorpus {
 
@@ -42,23 +43,14 @@ object ArabicCorpus {
 
   /** Full flagship output over the file corpus: per-file word rows
     * (word, word_len, word_truncated, file_path, words_count) — the
-    * reference's values_to_load_path row (v2/main.py:290-294).
+    * reference's values_to_load_path row (v2/main.py:290-294). One
+    * narrow stage over whole-file rows ([[WordPipeline.wordStatsOf]]);
+    * rows come in no particular order.
     */
-  def wordStats(spark: SparkSession, dir: String = SampleDir): DataFrame = {
-    val toks = TextFiles.wholeText(spark, "*.txt", dir)
-      .select(col("file_path"), explode(TextFunctions.arabicTokens(col("content"))).as("word"))
-      .select(col("file_path"), TextFunctions.normalizeWord(col("word")).as("word"))
-      .filter(col("word") =!= "")
-    val counts = toks.groupBy("file_path").agg(count(lit(1)).as("words_count"))
-    toks.distinct()
-      .join(counts, "file_path")
-      .select(
-        TextFunctions.truncate255(col("word")).as("word"),
-        length(TextFunctions.removeDiacritics(col("word"))).as("word_len"),
-        (length(col("word")) > 255).cast("int").as("word_truncated"),
-        // basename_backwards_x4 ∘ truncate_str_270, as v2/main.py:205
-        TextFunctions.basenameBackwards(col("file_path")).as("file_path"),
-        col("words_count"))
-      .orderBy("file_path", "word")
-  }
+  def wordStats(spark: SparkSession, dir: String = SampleDir): DataFrame =
+    WordPipeline.wordStatsOf(TextFiles.wholeText(spark, "*.txt", dir),
+      // basename_backwards_x4 ∘ truncate_str_270, as v2/main.py:205
+      TextFunctions.basenameBackwards(col("file_path")).as("file_path"),
+      transform(TextFunctions.arabicTokens(col("content")), TextFunctions.normalizeWord(_)))
+      .select("word", "word_len", "word_truncated", "file_path", "words_count")
 }

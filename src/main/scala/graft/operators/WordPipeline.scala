@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
 
@@ -16,10 +16,10 @@ import graft.sources.Tables
   * (`OneToOneItemAttributesTransformer`, one_to_one.py:9) → load rows
   * (word, word_len, word_truncated, file, words_count).
   *
-  * Spark-first: tokenization is `split`+`explode` (codegen'd, no UDF);
-  * the in-process reducer becomes a map-side-combined `groupBy(doc)`;
-  * the shared-memory uniqueness bag becomes `dropDuplicates` — all
-  * shuffles key on doc_id so the count⋈unique join is co-partitioned.
+  * Spark-first: tokenization is `split`, with no UDF. A document
+  * is one row, so the in-process reducer and the shared-memory
+  * uniqueness bag both become per-row array expressions
+  * ([[wordStatsOf]]): the flagship row needs no shuffle and no join.
   */
 object WordPipeline {
 
@@ -31,7 +31,7 @@ object WordPipeline {
   def tokensOf(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     docs
       .select(col(idCol).as("doc_id"), explode(split(col(textCol), "\\s+")).as("word"))
-      .select(col("doc_id"), lower(trim(col("word"))).as("word"))
+      .select(col("doc_id"), TextFunctions.normalizeWord(col("word")).as("word"))
       .filter(col("word") =!= "")
 
   def tokens(t: Tables): DataFrame = tokensOf(t.documents)
@@ -64,26 +64,32 @@ object WordPipeline {
   def uniqueWords(t: Tables): DataFrame =
     tokens(t).distinct().orderBy("doc_id", "word")
 
-  /** Flagship output row (v2/main.py:290-294 values_to_load_path):
-    * (word, word_len, word_truncated, doc_id, words_count).
-    * word_len counts the diacritics-stripped word (ArabicTextWordsTokenizer
-    * Transformer.remove_diac, v2/arabic_transformers.py:25); words are
-    * truncated to 255 chars (truncate_str_255, v2/core/commons.py).
-    * Both aggregates shuffle on doc_id once; the join is co-partitioned.
+  /** Flagship output row (v2/main.py:290-294 values_to_load_path) over
+    * [[wordStatsOf]]; the sort serves the oracle-checked query only.
     */
-  def wordStats(t: Tables): DataFrame = {
-    val toks   = tokens(t)
-    val counts = toks.groupBy("doc_id").agg(count(lit(1)).as("words_count"))
-    val uniq   = toks.distinct()
-    uniq
-      .join(counts, "doc_id")
-      .select(
-        col("doc_id"),
-        substring(col("word"), 1, 255).as("word"),
-        length(TextFunctions.removeDiacritics(col("word"))).cast("long").as("word_len"),
-        (length(col("word")) > 255).cast("int").as("word_truncated"),
-        col("words_count"))
+  def wordStats(t: Tables): DataFrame =
+    wordStatsOf(t.documents, col("doc_id"),
+      transform(split(col("text"), "\\s+"), TextFunctions.normalizeWord(_)))
+      .withColumn("word_len", col("word_len").cast("long"))
       .orderBy("doc_id", "word")
+
+  /** Per-row word stats, the core of both flagship forms: one row per
+    * distinct non-empty token w of each input row — (id, word =
+    * truncate_str_255(w) (v2/core/commons.py), word_len = length of w
+    * without tashkeel (v2/arabic_transformers.py:25), word_truncated,
+    * words_count = the row's non-empty token count). No exchange, join
+    * or sort: exact because a document is one row. `array_distinct`
+    * keeps first-occurrence order, so a retried task yields equal rows.
+    */
+  def wordStatsOf(rows: DataFrame, id: Column, toks: Column): DataFrame = {
+    val perRow = rows.select(id, filter(toks, _ =!= "").as("toks"))
+    val (idCol, w) = (col(perRow.columns.head), col("w"))
+    perRow
+      .select(idCol, explode(array_distinct(col("toks"))).as("w"),
+        size(col("toks")).cast("long").as("words_count"))
+      .select(idCol, TextFunctions.truncate255(w).as("word"),
+        length(TextFunctions.removeDiacritics(w)).as("word_len"),
+        (length(w) > 255).cast("int").as("word_truncated"), col("words_count"))
   }
 
   /** Per-doc word frequencies — the py-beam variant's exact output

@@ -40,9 +40,10 @@ object TextFiles {
 
   /** One row per file: (file_path, content) —
     * FileTextReaderTransformer analog (v2/core/transformers/files.py:57).
-    * Whole-file rows are memory-heavy; prefer [[lines]] unless the
-    * transform genuinely needs the full document (as the reference
-    * notes itself, v2/main.py:97).
+    * A file is never split across rows, which makes per-file statistics
+    * narrow, shuffle-free projections (`ArabicCorpus.wordStats`). The
+    * price: a row holds a whole file, and Spark caps a row at 2 GB (the
+    * reference notes the memory cost itself, v2/main.py:97).
     */
   def wholeText(spark: SparkSession, pattern: String, paths: String*): DataFrame =
     spark.read

@@ -31,7 +31,7 @@ class ArabicSpec extends AnyFunSuite {
   }
 
   test("flagship word stats over file corpus has reference row shape") {
-    val df = ArabicCorpus.wordStats(spark)
+    val df = ArabicCorpus.wordStats(spark, ArabicFixture.dir)
     assert(df.columns.toSeq ==
       Seq("word", "word_len", "word_truncated", "file_path", "words_count"))
     assert(df.count() > 0)

@@ -166,6 +166,29 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("n_chars"))
   }
 
+  /** Every node of the plan an action ran: AQE's final plan, stages included. */
+  private def executedNodes(df: org.apache.spark.sql.DataFrame): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    df.collect()
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  test("flagship word stats over files: one narrow stage, no exchange, sort or join") {
+    val names = executedNodes(ArabicCorpus.wordStats(spark, ArabicFixture.dir)).map(_.nodeName)
+    assert(!names.exists(n => n.contains("Exchange") || n.contains("Sort") || n.contains("Join")),
+      names.mkString(", "))
+  }
+
+  test("word pipeline word stats: the only exchange is the final orderBy") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val nodes     = executedNodes(WordPipeline.wordStats(t))
+    val exchanges = nodes.collect { case e: ShuffleExchangeExec => e.outputPartitioning }
+    assert(exchanges.size == 1 && exchanges.head.isInstanceOf[RangePartitioning], exchanges)
+    assert(nodes.count(_.nodeName.contains("Sort")) == 1 && !nodes.exists(_.nodeName.contains("Join")),
+      nodes.map(_.nodeName).mkString(", "))
+  }
+
   test("minhash-lsh: shingle base hashing happens before the doc aggregate") {
     val p = plan(Dedup.minhashLshPairs(t))
     assert(p.contains("partial_min"), "signature mins must be map-side partial")
