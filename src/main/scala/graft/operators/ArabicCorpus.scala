@@ -6,13 +6,17 @@ import graft.sources.TextFiles
 
 /** The reference's own use case end-to-end: Arabic word statistics
   * over a directory tree of `.txt` files (`dir`; [[SampleDir]] is the
-  * reference's sample corpus and is only a default). Mirrors
+  * in-repo seeded sample corpus and is only a default). Mirrors
   * v2/main.py's flagship pipeline with the Arabic tokenizer
   * (v2/arabic_transformers.py:6) on real Arabic text.
   */
 object ArabicCorpus {
 
-  val SampleDir = "/root/reference/sample_data"
+  /** `data/sample_data` (written by tools/gen_sample_data.py), resolved
+    * against the working directory, which is the repo root for sbt runs
+    * and tests; the SQL twins read the same absolute path.
+    */
+  val SampleDir: String = new java.io.File("data/sample_data").getAbsolutePath
 
   /** Per-word frequency of diacritics-stripped Arabic tokens across
     * the corpus — deterministic top-k.

@@ -4,14 +4,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.TextFiles
 
-/** File-corpus queries over the reference's own sample books
-  * (/root/reference/sample_data/books — 28 Project Gutenberg texts):
+/** File-corpus queries over the sample corpus's books
+  * (`data/sample_data/books` — 28 seeded English-like texts, most with
+  * the same Project Gutenberg-style license header and footer):
   * the extractor surface (§2.1) exercised end-to-end and oracle-gated
   * via DuckDB's read_text over the same files.
   */
 object FileCorpus {
 
-  val BooksDir = "/root/reference/sample_data/books"
+  val BooksDir = s"${ArabicCorpus.SampleDir}/books"
 
   private def fname(pathCol: org.apache.spark.sql.Column) =
     element_at(split(pathCol, "/"), -1)
@@ -48,8 +49,8 @@ object FileCorpus {
   /** Cross-file boilerplate LINE dedup (r14) — the RefinedWeb/CCNet
     * curation step the word-level dedups can't express: a line whose
     * exact (trimmed) text occurs in ≥ `minFiles` DISTINCT files is
-    * boilerplate (here the Project Gutenberg license apparatus is the
-    * natural positive class — the same real-world navigation/license
+    * boilerplate (here the Gutenberg-style license apparatus of the
+    * sample books is the positive class — the navigation/license
     * furniture the technique exists to remove), and dropping it is
     * line- not document-level surgery. The gated output is the
     * per-file removal manifest: lines seen, boilerplate lines dropped,

@@ -40,7 +40,7 @@ class ArabicSpec extends AnyFunSuite {
 
 class TextFilesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
-  val dir = "/root/reference/sample_data"
+  val dir = ArabicCorpus.SampleDir
 
   test("listFiles finds txt files without reading bodies") {
     val files = TextFiles.listFiles(spark, "*.txt", dir)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.WordPipeline
+import graft.operators.{ArabicCorpus, WordPipeline}
 import graft.sources.Tables
 
 /** Config-driven assembly must be a thin skin over the code-first
@@ -52,8 +52,8 @@ class PipelineConfigSpec extends AnyFunSuite {
   }
 
   test("text_files source + arabic tokenizer assemble from config") {
-    val json = """{
-      "source": {"type": "text_files", "path": "/root/reference/sample_data",
+    val json = s"""{
+      "source": {"type": "text_files", "path": "${ArabicCorpus.SampleDir}",
                  "pattern": "*.txt", "wholetext": true},
       "transforms": [
         {"op": "tokenize", "col": "content", "to": "word", "arabic": true},
@@ -85,8 +85,8 @@ class PipelineConfigSpec extends AnyFunSuite {
     // must reach the same partition-parallel JDBC writer the code-first
     // Flagship --db path uses
     val url = "jdbc:derby:target/derby-plc;create=true"
-    val json = """{
-      "source": {"type": "text_files", "path": "/root/reference/sample_data",
+    val json = s"""{
+      "source": {"type": "text_files", "path": "${ArabicCorpus.SampleDir}",
                  "pattern": "*.txt", "wholetext": true},
       "transforms": [
         {"op": "tokenize", "col": "content", "to": "word", "arabic": true},
@@ -105,7 +105,7 @@ class PipelineConfigSpec extends AnyFunSuite {
     PipelineConfig.run(spark, json)
     val back = spark.read.jdbc(url, "config_words", new java.util.Properties())
       .collect().map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
-    val want = graft.sources.TextFiles.wholeText(spark, "*.txt", "/root/reference/sample_data")
+    val want = graft.sources.TextFiles.wholeText(spark, "*.txt", ArabicCorpus.SampleDir)
       .select(col("file_path"),
         explode(graft.operators.TextFunctions.arabicTokens(col("content"))).as("word"))
       .select(col("file_path"), lower(trim(col("word"))).as("word"))

@@ -87,9 +87,10 @@ class StopShinglesSpec extends AnyFunSuite {
   }
 }
 
-/** dedup_lines: cross-file boilerplate line removal over the
-  * reference's Gutenberg books (real license furniture) plus a planted
-  * corpus pinning the exact threshold semantics.
+/** dedup_lines: cross-file boilerplate line removal over the in-repo
+  * sample books (`FileCorpus.BooksDir`, whose Project Gutenberg-style
+  * license lines repeat across most files) plus a planted corpus
+  * pinning the exact threshold semantics.
   */
 class DedupLinesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
