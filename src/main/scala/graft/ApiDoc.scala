@@ -59,34 +59,6 @@ object ApiDoc {
     }.toMap
   }
 
-  /** Latest plan-snapshot file (docs/PLANS_r{N}.md, max N). */
-  private def latestPlansFile(): Option[String] = {
-    val re = """PLANS_r(\d+)\.md""".r
-    val d = java.nio.file.Paths.get("docs")
-    if (!java.nio.file.Files.isDirectory(d)) return None
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.list(d).iterator().asScala.map(_.getFileName.toString)
-      .collect { case n @ re(num) => (num.toInt, n) }
-      .toSeq.sortBy(-_._1).headOption.map(_._2)
-  }
-
-  /** query id → GitHub anchor of its heading in the latest PLANS
-    * snapshot (r14, VERDICT r13 #7): every indexed query whose plan is
-    * snapshotted links straight to it, so query → plan → bench →
-    * oracle is two clicks. Anchor derivation mirrors GitHub's:
-    * lowercase, strip chars outside [a-z0-9 _-], spaces → hyphens.
-    */
-  private def planAnchors(plansFile: String): Map[String, String] = {
-    val head = """^## ([a-z0-9_]+)(.*)$""".r
-    read(java.nio.file.Paths.get(s"docs/$plansFile")).split("\n", -1).toSeq.flatMap {
-      line => head.findFirstMatchIn(line).map { m =>
-        val anchor = (m.group(1) + m.group(2)).toLowerCase
-          .replaceAll("[^a-z0-9 \\-_]", "").trim.replaceAll(" ", "-")
-        m.group(1) -> anchor
-      }
-    }.toMap
-  }
-
   private case class SurveyRow(section: String, id: String, gate: String)
 
   private def surveyRows(survey: String): Seq[SurveyRow] = {
@@ -130,11 +102,6 @@ object ApiDoc {
     def site(id: String): String =
       impls.get(id).flatMap(sites.get).map(s => s"`$s`").getOrElse("—")
 
-    val plansFile = latestPlansFile()
-    val anchors = plansFile.map(planAnchors).getOrElse(Map.empty[String, String])
-    def planLink(id: String): String =
-      (for { f <- plansFile; a <- anchors.get(id) } yield s"[plan]($f#$a) · ").getOrElse("")
-
     val sb = new StringBuilder
     sb ++= "# graft API index\n\n"
     sb ++= "GENERATED by `sbt \"runMain graft.ApiDoc\"` from SparkEntry + SURVEY.md §2 —\n"
@@ -143,11 +110,7 @@ object ApiDoc {
     sb ++= s"- **${queries.size} driver-gated queries** (`SparkEntry.queries`), of which ${oracled.size} carry DuckDB oracle twins\n"
     sb ++= "- every gated query runs as `SparkEntry.queries(<id>)(spark, sfDir)`; the\n"
     sb ++= "  `file:line` column is the implementing `def` (the place to read the plan\n"
-    sb ++= "  rationale and the 100 TB notes)\n"
-    sb ++= plansFile.fold("")(f =>
-      s"- plan snapshots: [docs/$f]($f) and prior rounds — a `[plan]` link in a\n" +
-        "  notes cell jumps to that query's snapshotted physical plan; bench\n" +
-        "  artifacts: `docs/bench_full_r*.json`\n\n")
+    sb ++= "  rationale and the 100 TB notes)\n\n"
     for ((section, rs) <- bySection) {
       val title = section match {
         case "§2.1" => "sources"
@@ -163,7 +126,7 @@ object ApiDoc {
       sb ++= s"## $section $title (${rs.size} rows)\n\n"
       sb ++= "| operator | gate | entry point | notes |\n|---|---|---|---|\n"
       for (r <- rs)
-        sb ++= s"| `${r.id}` | ${gateKind(r.id)} | ${site(r.id)} | ${planLink(r.id)}${short(r.gate)} |\n"
+        sb ++= s"| `${r.id}` | ${gateKind(r.id)} | ${site(r.id)} | ${short(r.gate)} |\n"
       sb ++= "\n"
     }
     // query keys gated under a LIBRARY row (the SURVEY reconciliation's
@@ -172,9 +135,9 @@ object ApiDoc {
     val extra = (queries -- rows.map(_.id).toSet).toSeq.sorted
     if (extra.nonEmpty) {
       sb ++= s"## query keys gated under library rows (${extra.size})\n\n"
-      sb ++= "| query key | gate | entry point | notes |\n|---|---|---|---|\n"
+      sb ++= "| query key | gate | entry point |\n|---|---|---|\n"
       for (id <- extra)
-        sb ++= s"| `$id` | ${gateKind(id)} | ${site(id)} | ${planLink(id)} |\n"
+        sb ++= s"| `$id` | ${gateKind(id)} | ${site(id)} |\n"
       sb ++= "\n"
     }
     sb.result()

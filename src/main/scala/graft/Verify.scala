@@ -26,9 +26,9 @@ object Verify {
     // 4 concurrent dumps: queries are independent Spark jobs sharing
     // the session; the scheduler interleaves their stages.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    // Local-iteration filter (same contract as Bench): comma-separated
-    // query names; unset → the driver's full dump. Fails loudly on a
-    // typo rather than dumping an empty dir that reads as a clean run.
+    // Local-iteration filter: comma-separated query names; unset → the
+    // driver's full dump. Fails loudly on a typo rather than dumping an
+    // empty dir that reads as a clean run.
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     only.foreach { names =>

@@ -30,7 +30,6 @@ object Par {
     * empty or doubled under hash collisions).
     */
   def spread(df: DataFrame, keys: Seq[String]): DataFrame = {
-    if (sys.env.contains("SPARK_GRAFT_NO_SPREAD")) return df
     // Guard (r14 ADVICE): `.rdd` under AQE triggers
     // getFinalPhysicalPlan, which eagerly RUNS upstream shuffle stages
     // at plan-build time if the plan contains exchanges. spread is

@@ -20,6 +20,12 @@ class EdgeCaseSpec extends AnyFunSuite {
     (4L, "Hello  world  hello"),
     (5L, "a b c a b c")).toDF("doc_id", "text")
 
+  /** True once anything under `f` is a regular file (Spark creates the
+    * checkpoint dir's subdirectories eagerly; files mean a checkpoint).
+    */
+  private def anyFile(f: java.io.File): Boolean =
+    f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
+
   test("tokensOf handles empty and whitespace-only docs") {
     val toks = WordPipeline.tokensOf(docs).collect()
       .map(r => (r.getLong(0), r.getString(1)))
@@ -82,8 +88,6 @@ class EdgeCaseSpec extends AnyFunSuite {
       val labels = Dedup.nearDupClusters(pairs, maxIter = 20)
       assert(labels.collect().forall(_.getLong(1) == 0L))
       // reliable checkpoint files must actually exist under the dir
-      def anyFile(f: java.io.File): Boolean =
-        f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
       assert(anyFile(new java.io.File(dir)), "no reliable checkpoint written")
     } finally spark.sparkContext.setCheckpointDir(null)
   }
@@ -236,9 +240,10 @@ class EdgeCaseSpec extends AnyFunSuite {
     // star: hub 0 -> leaves 1,2 (weights 1,3); leaf 1 -> leaf 2.
     val edges = Seq((0L, 1L, 1.0), (0L, 2L, 3.0), (1L, 2L, 1.0)).toDF("src", "dst", "w")
     val nodes = Seq(0L, 1L, 2L).toDF("node")
-    val iters = 12 // two localCheckpoint cuts (i=5,10) inside the loop
-    val got = graft.operators.Graph.pageRankOf(edges, nodes, iters = iters).collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).toMap
+    val iters = 12 // two lineage cuts (i=5,10) inside the loop
+    def ranks(): Map[Long, Double] =
+      graft.operators.Graph.pageRankOf(edges, nodes, iters = iters).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).toMap
     // the same recurrence run directly: contrib(dst) = sum over in-edges
     // of rank(src) * w / wout(src); rank = (1-d)/n + d*contrib
     val (d, n) = (0.85, 3.0)
@@ -251,10 +256,20 @@ class EdgeCaseSpec extends AnyFunSuite {
         1L -> ((1 - d) / n + d * c1),
         2L -> ((1 - d) / n + d * c2))
     }
-    rank.foreach { case (node, want) =>
-      assert(got(node) == math.rint(want * 1e6) / 1e6,
-        s"node $node: got ${got(node)} want $want")
-    }
+    def check(cut: String, got: Map[Long, Double]): Unit =
+      rank.foreach { case (node, want) =>
+        assert(got(node) == math.rint(want * 1e6) / 1e6,
+          s"$cut cuts, node $node: got ${got(node)} want $want")
+      }
+    // no checkpoint dir: the cuts are localCheckpoints
+    check("local", ranks())
+    // with a checkpoint dir: the persist → checkpoint → unpersist branch
+    val dir = java.nio.file.Files.createTempDirectory("graft-pagerank-ckpt").toString
+    spark.sparkContext.setCheckpointDir(dir)
+    try {
+      check("reliable", ranks())
+      assert(anyFile(new java.io.File(dir)), "no reliable checkpoint written")
+    } finally spark.sparkContext.setCheckpointDir(null)
   }
 
   test("pageRankConverged: stops before maxIters and equals the fixed form at the stop count") {
