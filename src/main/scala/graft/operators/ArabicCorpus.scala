@@ -55,6 +55,8 @@ object ArabicCorpus {
     WordPipeline.wordStatsOf(TextFiles.wholeText(spark, "*.txt", dir),
       // basename_backwards_x4 ∘ truncate_str_270, as v2/main.py:205
       TextFunctions.basenameBackwards(col("file_path")).as("file_path"),
-      transform(TextFunctions.arabicTokens(col("content")), TextFunctions.normalizeWord(_)))
+      // the reference's lower∘strip word normalizer (v2/main.py:112) is
+      // the identity on Arabic tokens (no case, no spaces): not applied
+      TextFunctions.arabicTokens(col("content")))
       .select("word", "word_len", "word_truncated", "file_path", "words_count")
 }

@@ -30,19 +30,23 @@ object Par {
     * empty or doubled under hash collisions).
     */
   def spread(df: DataFrame, keys: Seq[String]): DataFrame = {
-    // Guard (r14 ADVICE): `.rdd` under AQE triggers
-    // getFinalPhysicalPlan, which eagerly RUNS upstream shuffle stages
-    // at plan-build time if the plan contains exchanges. spread is
-    // specified for raw source scans only; when handed a plan that
-    // already contains an exchange, return it untouched — AQE sizes
-    // post-shuffle parallelism there anyway, and inspecting .rdd would
-    // cost an eager partial execution.
+    val parallelism = df.sparkSession.sparkContext.defaultParallelism
+    narrowPartitions(df) match {
+      case Some(p) if p < parallelism => df.repartition(parallelism, keys.map(df(_)): _*)
+      case _                          => df
+    }
+  }
+
+  /** The partition count of `df` when its plan has no exchange, else
+    * None. Guard (r14 ADVICE): `.rdd` under AQE triggers
+    * getFinalPhysicalPlan, which eagerly RUNS upstream shuffle stages
+    * at plan-build time if the plan contains exchanges; an exchange-free
+    * plan only lists its splits. Callers treat None as "already
+    * shuffled": AQE sizes post-shuffle parallelism there anyway.
+    */
+  def narrowPartitions(df: DataFrame): Option[Int] = {
     val hasExchange = df.queryExecution.sparkPlan.exists(
       _.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange])
-    if (hasExchange) return df
-    val sc = df.sparkSession.sparkContext
-    if (df.rdd.getNumPartitions < sc.defaultParallelism)
-      df.repartition(sc.defaultParallelism, keys.map(df(_)): _*)
-    else df
+    if (hasExchange) None else Some(df.rdd.getNumPartitions)
   }
 }

@@ -2,9 +2,11 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.functions.ArabicTokensExpr
 
 /** Column-level text functions mirroring the reference's word mappers.
-  * All are compositions of built-in (codegen'd) functions — no UDFs.
+  * All are compositions of built-in (codegen'd) functions, except
+  * [[arabicTokens]], which is one native Catalyst expression — no UDFs.
   */
 object TextFunctions {
 
@@ -16,14 +18,13 @@ object TextFunctions {
 
   def removeDiacritics(c: Column): Column = translate(c, ArabicDiacritics, "")
 
-  /** Arabic letter-run extraction (v2/arabic_transformers.py:17-24):
-    * runs of Arabic letters + diacritics are the token candidates.
+  /** Array of the Arabic tokens in `c`, in order: the maximal runs of
+    * Arabic letters, tatweel and tashkeel (U+0621–U+063A,
+    * U+0640–U+0652; v2/arabic_transformers.py:17-24), found in one scan
+    * over the UTF-8 bytes ([[graft.functions.ArabicTokensExpr]]). Bytes
+    * that are not valid UTF-8 separate tokens. No token is empty.
     */
-  val ArabicTokenPattern: String = "[\\u0621-\\u063a\\u0640-\\u0652\\u0622\\u0623\\u0624\\u0625\\u0626\\u0629\\u0649]+"
-
-  /** Array of Arabic tokens in `c`. */
-  def arabicTokens(c: Column): Column =
-    filter(regexp_extract_all(c, lit(ArabicTokenPattern), lit(0)), w => trim(w) =!= "")
+  def arabicTokens(c: Column): Column = ArabicTokensExpr.tokens(c)
 
   /** truncate_str_255 analog (v2/core/commons.py). */
   def truncate255(c: Column): Column = substring(c, 1, 255)

@@ -2,6 +2,7 @@ package graft.sinks
 
 import java.sql.{Connection, DriverManager}
 import org.apache.spark.sql.DataFrame
+import graft.operators.Par
 
 /** Loader surface — the reference's single-process buffered writers
   * re-expressed as partition-parallel Spark writes.
@@ -10,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * (CSV_FileLoader, /root/reference v2/core/loaders/files.py:44) and
   * fans out through a hand-built LoadBalanceLoader (loadbalancer.py).
   * In Spark every partition writes in parallel by construction, and
-  * `repartition(n)` IS the load balancer.
+  * `repartition(n)` is the load balancer ([[loadBalanced]]).
   */
 object Sinks {
 
@@ -42,11 +43,15 @@ object Sinks {
   def conditional(condition: => Boolean)(df: DataFrame)(sink: DataFrame => Unit): Unit =
     if (condition) sink(df)
 
-  /** LoadBalanceLoader analog (v2/core/loaders/loadbalancer.py): level
-    * the write parallelism, then any sink runs n-wide.
+  /** LoadBalanceLoader analog (v2/core/loaders/loadbalancer.py): the
+    * sink always sees exactly n partitions. A frame whose plan has no
+    * exchange and is already n partitions wide (a whole-file scan on n
+    * cores) passes through unshuffled; any other frame is round-robined
+    * by `repartition(n)`. Never `coalesce`: it would narrow the upstream
+    * stage itself to n tasks.
     */
   def loadBalanced(df: DataFrame, n: Int)(sink: DataFrame => Unit): Unit =
-    sink(df.repartition(n))
+    sink(if (Par.narrowPartitions(df).contains(n)) df else df.repartition(n))
 
   /** NoopLoader analog (v2/core/loaders/commons.py:40): materialize and
     * drop — used to force a plan for its side effects/metrics.

@@ -25,7 +25,7 @@ class ClusteredRecallSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private lazy val t: Tables = {
-    val dir = java.nio.file.Files.createTempDirectory("clustered").toString
+    val dir = TestSpark.tempDir("clustered").toString
     Synthetic.writeClusteredCorpus(spark, dir, 2000L)
     Tables(spark, dir)
   }

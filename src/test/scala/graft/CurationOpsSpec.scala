@@ -177,7 +177,7 @@ class PplBucketsSpec extends AnyFunSuite {
     val spark2 = spark
     import spark2.implicits._
     def bucketsFor(n: Int): Seq[(Long, Long)] = {
-      val dir = java.nio.file.Files.createTempDirectory(s"ppl$n").toString
+      val dir = TestSpark.tempDir(s"ppl$n").toString
       Seq.tabulate(n)(i => (i.toLong, s"word$i common tail"))
         .toDF("doc_id", "text")
         .withColumn("lang", lit("en")).withColumn("source", lit("t"))
@@ -193,7 +193,7 @@ class PplBucketsSpec extends AnyFunSuite {
 
   test("curateFromArtifact == curate: the persisted-artifact production path is bit-identical") {
     val t = Tables(spark, TestSpark.sf)
-    val dir = java.nio.file.Files.createTempDirectory("curateart").toString
+    val dir = TestSpark.tempDir("curateart").toString
     Curate.writeAnnotateArtifact(t.documents, dir)
     val composed = Curate.curate(t).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toList
@@ -229,7 +229,7 @@ class PplBucketsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("curatecut").toString
+    val dir = TestSpark.tempDir("curatecut").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val out = Curate.curate(Tables(spark2, dir)).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toMap
@@ -269,7 +269,7 @@ class PplBucketsSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("curatecut2").toString
+    val dir = TestSpark.tempDir("curatecut2").toString
     docs.write.parquet(s"$dir/documents.parquet")
     val out = Curate.curate(Tables(spark2, dir)).collect()
       .map(r => (r.getLong(0), r.getDouble(2))).toMap

@@ -81,7 +81,7 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("nearDupClusters takes the RELIABLE checkpoint path when a dir is configured") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    val dir = TestSpark.tempDir("graft-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
@@ -264,7 +264,7 @@ class EdgeCaseSpec extends AnyFunSuite {
     // no checkpoint dir: the cuts are localCheckpoints
     check("local", ranks())
     // with a checkpoint dir: the persist → checkpoint → unpersist branch
-    val dir = java.nio.file.Files.createTempDirectory("graft-pagerank-ckpt").toString
+    val dir = TestSpark.tempDir("graft-pagerank-ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
     try {
       check("reliable", ranks())

@@ -33,15 +33,18 @@ object ArabicFixture {
     "corpus/misc/crlf/notes.md" -> "هذا الملف ليس نصا")
 
   /** The fixture's corpus dir, written once per JVM and deleted at exit. */
-  lazy val dir: String = {
-    val root = Files.createTempDirectory("graft-arabic-fixture")
-    files.foreach { case (rel, text) =>
+  lazy val dir: String =
+    write("graft-arabic-fixture", files.map { case (rel, text) => rel -> text.getBytes(UTF_8) })
+
+  /** Writes `files` (path under the root → bytes) to a fresh temp root
+    * deleted at JVM exit; returns the root's `corpus` dir.
+    */
+  def write(prefix: String, files: Seq[(String, Array[Byte])]): String = {
+    val root = TestSpark.tempDir(prefix)
+    files.foreach { case (rel, bytes) =>
       val p = root.resolve(rel)
       Files.createDirectories(p.getParent)
-      Files.write(p, text.getBytes(UTF_8))
-    }
-    sys.addShutdownHook {
-      Files.walk(root).iterator().asScala.toSeq.reverse.foreach(p => Files.deleteIfExists(p))
+      Files.write(p, bytes)
     }
     root.resolve("corpus").toString
   }
@@ -70,8 +73,8 @@ class FlagshipTruthSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import ArabicFixture._
 
-  private def wordStatsRows(): Seq[Row] =
-    ArabicCorpus.wordStats(spark, dir).collect().toSeq
+  private def wordStatsRows(corpus: String = dir): Seq[Row] =
+    ArabicCorpus.wordStats(spark, corpus).collect().toSeq
       .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getString(3), r.getLong(4)))
       .sorted
 
@@ -101,5 +104,32 @@ class FlagshipTruthSpec extends AnyFunSuite {
       _.filterNot(_._4.endsWith("copy.txt")),
       _ :+ (("كتاب", 4, 0, want.head._4, want.head._5)))
     plants.foreach(plant => assert(diff(got, plant(want)).nonEmpty))
+  }
+
+  test("hostile bytes: a BOM, invalid UTF-8 between words and a 1 MB line match the truth") {
+    def utf8(text: String) = text.getBytes(UTF_8)
+    def raw(bytes: Int*) = bytes.map(_.toByte).toArray
+    val words = Seq("كِتَاب", "قلم", "مدرسة", "بيت", "ولـــد", "السَّلامُ")
+    val line  = Iterator.continually(words).flatten.take(100000).mkString(" ")
+    val files = Seq(
+      "corpus/hostile/enc/bom.txt" -> (raw(0xef, 0xbb, 0xbf) ++ utf8("بسم الله الرحمن")),
+      // a lone D8 and D9, FF, a truncated 3-byte lead and a final D8,
+      // glued between Arabic words
+      "corpus/hostile/enc/invalid.txt" -> (utf8("كتاب") ++ raw(0xd8) ++ utf8("قلم ") ++ raw(0xd9) ++
+        utf8("abc مدرسة") ++ raw(0xff) ++ utf8("بيت ") ++ raw(0xe2, 0x80) ++ utf8("ولد") ++
+        raw(0xd8, 0x20) ++ utf8("كتاب") ++ raw(0xd8)),
+      "corpus/hostile/big/line.txt" -> utf8(line))
+    val corpus = write("graft-hostile", files)
+    val want = truth(corpus)
+    assert(Files.size(Path.of(corpus, "hostile/big/line.txt")) > 1000000)
+    // invalid bytes separate tokens: six tokens, five distinct
+    val invalid = want.filter(_._4.endsWith("invalid.txt"))
+    assert(invalid.map(_._1).toSet == Set("كتاب", "قلم", "مدرسة", "بيت", "ولد") &&
+      invalid.forall(_._5 == 6L), invalid)
+    assert(want.filter(_._4.endsWith("bom.txt")).map(_._1).toSet == Set("بسم", "الله", "الرحمن"))
+    assert(want.filter(_._4.endsWith("line.txt")).map(r => (r._1, r._5)).toSet ==
+      words.map(w => (w, 100000L)).toSet)
+    val problems = diff(wordStatsRows(corpus), want)
+    assert(problems.isEmpty, problems.take(10).mkString("\n"))
   }
 }

@@ -33,7 +33,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("csv round trip recovers newlines, quotes, delimiters, unicode and the empty string bit-exactly") {
     val in = adversarial
-    val dir = java.nio.file.Files.createTempDirectory("csv_rt").toString
+    val dir = TestSpark.tempDir("csv_rt").toString
     val back = Formats.csvRoundTrip(in, dir)
     val a = in.orderBy("doc_id").collect().map(_.toSeq).toList
     val b = back.orderBy("doc_id").collect().map(_.toSeq).toList

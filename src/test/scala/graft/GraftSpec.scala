@@ -12,6 +12,17 @@ object TestSpark {
   }
   val sf: String = "/root/testdata/sf0.001"
 
+  /** A fresh temp dir, deleted with everything under it when the JVM exits. */
+  def tempDir(prefix: String): java.nio.file.Path = {
+    import scala.jdk.CollectionConverters._
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook {
+      scala.util.Try(java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+        .foreach(p => java.nio.file.Files.deleteIfExists(p)))
+    }
+    dir
+  }
+
   /** Stop a continuously-triggering query OFF the commit path (VERDICT
     * r12 #3): a stop() that lands mid-batch races the state store
     * commit and the killed tasks log CANNOT_WRITE_STATE_STORE.

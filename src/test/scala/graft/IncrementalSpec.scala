@@ -36,7 +36,7 @@ class IncrementalSpec extends AnyFunSuite {
     // (e,we) ("e" < "n" < "s" < "we"). Round 4: after e+we → ewe,
     // (ewe,s) wins the 6-tie the same way.
     val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++ Seq.fill(6)("newest")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("bpe").toString
+    val dir = TestSpark.tempDir("bpe").toString
     Seq((1L, text)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -71,7 +71,7 @@ class IncrementalSpec extends AnyFunSuite {
     // batch — 4 merges in one round, still sequential-identical
     val text = (Seq.fill(9)("abab") ++ Seq.fill(8)("cdcd") ++
       Seq.fill(7)("efef") ++ Seq.fill(6)("ghgh")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("bpebatchind").toString
+    val dir = TestSpark.tempDir("bpebatchind").toString
     Seq((1L, text)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -93,7 +93,7 @@ class IncrementalSpec extends AnyFunSuite {
     // Batched must fall back to near-sequential behavior here and still
     // match the sequential table exactly.
     val text = (Seq.fill(9)("ababab") ++ Seq.fill(7)("xyz") ++ Seq.fill(7)("qrs")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("bpeadv").toString
+    val dir = TestSpark.tempDir("bpeadv").toString
     Seq((1L, text)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -112,7 +112,7 @@ class IncrementalSpec extends AnyFunSuite {
     // the sequential table exactly here
     val text = (Seq.fill(9)("abab") ++ Seq.fill(8)("cdcd") ++
       Seq.fill(7)("efef") ++ Seq.fill(6)("ghgh")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("bpefast").toString
+    val dir = TestSpark.tempDir("bpefast").toString
     Seq((1L, text)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -153,7 +153,7 @@ class IncrementalSpec extends AnyFunSuite {
     // the SAME pair is legitimately re-picked across rounds — the
     // in-memory queue must reproduce both the quirk and the re-pick
     val text = (Seq.fill(9)("ababab") ++ Seq.fill(2)("xy")).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("bpelocal").toString
+    val dir = TestSpark.tempDir("bpelocal").toString
     Seq((1L, text)).toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
@@ -184,7 +184,7 @@ class IncrementalSpec extends AnyFunSuite {
   }
 
   test("expectations: violations actually flip pass flags") {
-    val dir = java.nio.file.Files.createTempDirectory("expect").toString
+    val dir = TestSpark.tempDir("expect").toString
     Seq(
       (1L, "hello there", "en", "s0", 11L),
       (1L, "dup id", "en", "s0", 6L),        // uniqueness violation

@@ -187,7 +187,7 @@ class DedupSpec extends AnyFunSuite {
     val corpus = (1L to 30L)
       .map(i => (i, s"alpha$i beta$i gamma$i delta$i epsilon$i zeta$i eta$i theta$i"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lshidx").toString
+    val dir = TestSpark.tempDir("lshidx").toString
     Dedup.minhashIndexBuild(corpus, dir)
     val batch = Seq(
       (1001L, "alpha7 beta7 gamma7 delta7 epsilon7 zeta7 eta7 CHANGED"), // near-dup of doc 7
@@ -211,10 +211,10 @@ class DedupSpec extends AnyFunSuite {
       .union(Seq((1005L, "alpha5 beta5 gamma5 delta5 epsilon5 zeta5 eta5 CHANGED"))
         .toDF("doc_id", "text"))
     val probe = corpus(1 to 30).union(dayTwo.filter(col("doc_id") === 1005L))
-    val incDir = java.nio.file.Files.createTempDirectory("lshinc").toString
+    val incDir = TestSpark.tempDir("lshinc").toString
     Dedup.minhashIndexBuild(dayOne, incDir)
     Dedup.minhashIndexAppend(dayTwo, incDir)
-    val fullDir = java.nio.file.Files.createTempDirectory("lshfull").toString
+    val fullDir = TestSpark.tempDir("lshfull").toString
     Dedup.minhashIndexBuild(dayOne.union(dayTwo), fullDir)
     def pairs(dir: String) = Dedup.minhashIndexProbe(probe, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -230,7 +230,7 @@ class DedupSpec extends AnyFunSuite {
     val corpus = (1L to 5L)
       .map(i => (i, s"alpha$i beta$i gamma$i delta$i epsilon$i"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lshmeta").toString
+    val dir = TestSpark.tempDir("lshmeta").toString
     Dedup.minhashIndexBuild(corpus, dir, rowsPerBand = 2)
     // rowsPerBand mismatch: every band key would miss — zero
     // candidates that READ as "no near-dups"; must throw instead
@@ -244,7 +244,7 @@ class DedupSpec extends AnyFunSuite {
     // matched parameters still probe fine
     assert(Dedup.minhashIndexProbe(corpus, dir).collect() != null)
     // curate artifact: spanK is baked into wins/
-    val art = java.nio.file.Files.createTempDirectory("curmeta").toString
+    val art = TestSpark.tempDir("curmeta").toString
     graft.operators.Curate.writeAnnotateArtifact(corpus, art, spanK = 10)
     val e2 = intercept[IllegalArgumentException] {
       graft.operators.Curate.curateFromArtifact(spark, art, spanK = 5)
@@ -260,7 +260,7 @@ class DedupSpec extends AnyFunSuite {
     val corpus = (1L to 5L)
       .map(i => (i, s"alpha$i beta$i gamma$i delta$i epsilon$i"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("sbandmeta").toString
+    val dir = TestSpark.tempDir("sbandmeta").toString
     graft.streaming.Streams.buildBandIndex(corpus, s"$dir/index", rowsPerBand = 2)
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext

@@ -162,7 +162,7 @@ class PcaSpec extends AnyFunSuite {
     // the dominance that is OPQ's point, measured where quantization
     // error is meaningful (planted clusters; the driver testdata is
     // near-random — nothing to decorrelate)
-    val dir = java.nio.file.Files.createTempDirectory("opq_clustered").toString
+    val dir = TestSpark.tempDir("opq_clustered").toString
     graft.sources.Synthetic.writeClusteredCorpus(spark, dir, 1000L)
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val m = 4; val k = 16

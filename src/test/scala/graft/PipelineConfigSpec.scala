@@ -128,7 +128,7 @@ class PipelineConfigSpec extends AnyFunSuite {
   }
 
   test("config sink writes: csv round-trips the assembled frame") {
-    val out = java.nio.file.Files.createTempDirectory("plc").toString + "/out"
+    val out = TestSpark.tempDir("plc").toString + "/out"
     val json = s"""{
       "source": {"type": "table", "dir": "${TestSpark.sf}", "name": "documents"},
       "transforms": [

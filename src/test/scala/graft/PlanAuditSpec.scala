@@ -179,6 +179,20 @@ class PlanAuditSpec extends AnyFunSuite {
       names.mkString(", "))
   }
 
+  test("loadBalanced hands the cached flagship frame to the sink with no exchange") {
+    val words = ArabicCorpus.wordStats(spark, ArabicFixture.dir).cache()
+    try {
+      words.count()
+      val n = words.rdd.getNumPartitions
+      var sunk = Seq.empty[String]
+      graft.sinks.Sinks.loadBalanced(words, n) { d =>
+        assert(d.rdd.getNumPartitions == n)
+        sunk = executedNodes(d).map(_.nodeName)
+      }
+      assert(sunk.nonEmpty && !sunk.exists(_.contains("Exchange")), sunk.mkString(", "))
+    } finally words.unpersist()
+  }
+
   test("word pipeline word stats: the only exchange is the final orderBy") {
     import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec

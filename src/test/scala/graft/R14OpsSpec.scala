@@ -96,7 +96,7 @@ class DedupLinesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   test("planted corpus: exactly the >= minFiles lines drop, chars conserved") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dedup-lines").toFile
+    val dir = TestSpark.tempDir("graft-dedup-lines").toFile
     def write(name: String, lines: Seq[String]): Unit =
       java.nio.file.Files.write(new java.io.File(dir, name).toPath,
         lines.mkString("\n").getBytes("UTF-8"))

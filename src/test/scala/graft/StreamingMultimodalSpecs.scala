@@ -267,7 +267,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("upsert_snap").toString + "/snap"
+    val dir = TestSpark.tempDir("upsert_snap").toString + "/snap"
     val base = Seq((1L, "en", "s0", 100L), (2L, "en", "s0", 200L), (3L, "fr", "s1", 300L))
       .toDF("doc_id", "lang", "source", "n_chars")
     Streams.seedSnapshot(base, dir)
@@ -303,7 +303,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("scd2_dim").toString + "/dim"
+    val dir = TestSpark.tempDir("scd2_dim").toString + "/dim"
     val dim0 = Seq((1L, "A"), (2L, "B"), (3L, "C")).toDF("key", "attr")
       .select(col("key"), col("attr"), lit("1995-01-01").cast("date").as("valid_from"),
         lit(null).cast("date").as("valid_to"), lit(true).as("is_current"))
@@ -462,7 +462,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ndi").toString
+    val dir = TestSpark.tempDir("ndi").toString
     val (idxDir, accDir) = (s"$dir/index", s"$dir/accepted")
     def runBatches(ckpt: String): Unit = {
       val mem = MemoryStream[(Long, String)]
@@ -507,7 +507,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("seed").toString
+    val dir = TestSpark.tempDir("seed").toString
     val (idxDir, accDir) = (s"$dir/index", s"$dir/acc")
     val corpusA = Seq((100L, "alpha beta gamma delta epsilon zeta eta theta")).toDF("doc_id", "text")
     Streams.buildBandIndex(corpusA, idxDir)

@@ -33,7 +33,7 @@ class TsEncodingSpec extends AnyFunSuite {
     * eventsStream's pathGlobFilter matches against.
     */
   private def writeSingleFile(df: org.apache.spark.sql.DataFrame, dest: java.nio.file.Path): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("ts_enc_w").toString
+    val tmp = TestSpark.tempDir("ts_enc_w").toString
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     val part = new java.io.File(tmp).listFiles()
       .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet")).get
@@ -42,7 +42,7 @@ class TsEncodingSpec extends AnyFunSuite {
   }
 
   private lazy val base = {
-    val dir = java.nio.file.Files.createTempDirectory("ts_enc").toString
+    val dir = TestSpark.tempDir("ts_enc").toString
     import spark.implicits._
     val rows = instants.zipWithIndex.map { case (m, i) => (i.toLong, m) }
 
