@@ -48,31 +48,4 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-
-  /** The conf deltas for a real multi-executor deployment (100 TB /
-    * ~1000 executors) — applied on top of [[builder]]. Kept as data so
-    * the scale posture is reviewable and testable, not tribal
-    * knowledge. Values are starting points per public Spark tuning
-    * guidance; the constant is unused in local mode by design.
-    */
-  val clusterConf: Map[String, String] = Map(
-    // shuffle sizing: AQE coalesces down from a high initial count so
-    // wide stages never start under-partitioned at 100 TB
-    "spark.sql.shuffle.partitions" -> "4000",
-    "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "4000",
-    // ~128 MB scan splits keep task count ∝ data size
-    "spark.sql.files.maxPartitionBytes" -> "134217728",
-    // executors sized for shuffle-heavy text/dedup work
-    "spark.executor.cores" -> "4",
-    "spark.executor.memory" -> "16g",
-    "spark.executor.memoryOverhead" -> "4g",
-    "spark.memory.fraction" -> "0.6",
-    // elastic fleet with shuffle data preserved across executor loss
-    "spark.dynamicAllocation.enabled" -> "true",
-    "spark.dynamicAllocation.maxExecutors" -> "1000",
-    "spark.shuffle.service.enabled" -> "true",
-    // durable shuffle + zstd everywhere (I/O-bound at this scale)
-    "spark.io.compression.codec" -> "zstd",
-    "spark.shuffle.compress" -> "true",
-    "spark.speculation" -> "true")
 }

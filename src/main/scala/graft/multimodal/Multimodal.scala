@@ -2,6 +2,7 @@ package graft.multimodal
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Lineage
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary`
   * payloads plus typed metadata, processed per-partition in batches.
@@ -319,12 +320,11 @@ object Multimodal {
     // Project alias down to the scan, planting a filter that evaluates
     // the phash expression interpreted — with the inlined mean
     // aggregate re-run PER ZIP ELEMENT (60×60 md5 per row; measured
-    // 50 s vs ~2 s at sf0.1). localCheckpoint truncates the plan to a
+    // 50 s vs ~2 s at sf0.1). The cut truncates the plan to a
     // 16-byte-per-row leaf the constraint cannot push past, so the
-    // hash build runs exactly once. At production scale the same cut
-    // is a reliable checkpoint / persisted hash table — pHash indexes
-    // are build-once artifacts anyway.
-    val allm = ph.unionByName(variants).localCheckpoint()
+    // hash build runs exactly once (reliable when a checkpoint dir is
+    // set — pHash indexes are build-once artifacts anyway).
+    val allm = ph.unionByName(variants).transform(Lineage.cut)
     val banded = allm.select(col("media_id"), col("phash"),
       explode(array((0 until bands).map { b =>
         struct(lit(b).as("band"), shiftright(col("phash"), b * width).bitwiseAND(lit(mask)).as("key"))

@@ -316,7 +316,7 @@ object Analytics {
       .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt"))
       // r15 (guide §5): both wedge legs and the closing-edge probe
       // reference this oriented edge list — materialize it once
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.s") === col("e2.s") &&
         struct(col("e1.dt"), col("e1.t")) < struct(col("e2.dt"), col("e2.t")))

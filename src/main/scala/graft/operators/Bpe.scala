@@ -78,7 +78,7 @@ object Bpe {
             concat(lit(" "), lit(a), lit(" "), lit(b), lit(" ")),
             concat(lit(" "), lit(a + b), lit(" "))))
           .cache()
-        syms = cutLineage(syms, i, merges)
+        syms = Lineage.cutEvery(syms, i, merges)
       }
     }
     if (retired != null) retired.unpersist(blocking = false)
@@ -135,24 +135,6 @@ object Bpe {
   val defaultMerges: Seq[(String, String)] = Seq(
     ("t", "h"), ("th", "e"), ("i", "n"), ("a", "n"),
     ("e", "r"), ("o", "n"), ("r", "e"), ("o", "r"))
-
-  /** Lineage cut every 5 merge rounds (the pageRankOf cadence): each
-    * round nests the previous round's plan, so past ~20 rounds plan
-    * analysis — and even rendering the AQE explain string — grows
-    * without bound (a 24-merge run OOMed on the PLAN TEXT, not the
-    * data). Reliable checkpoint when a dir is configured; local
-    * otherwise. Skipped on the final round — the caller's action
-    * materializes it anyway.
-    */
-  private def cutLineage(syms: DataFrame, round: Int, last: Int): DataFrame =
-    if (round % 5 == 0 && round < last) {
-      val prev = syms
-      val cut =
-        if (syms.sparkSession.sparkContext.getCheckpointDir.isDefined) syms.checkpoint()
-        else syms.localCheckpoint()
-      prev.unpersist(blocking = false)
-      cut
-    } else syms
 
   /** [[bpeTrain]] with EXACT per-round merge batching: selects a
     * prefix of compatible merges from one pair-count pass and applies
@@ -297,7 +279,7 @@ object Bpe {
               concat(lit(" "), lit(a), lit(" "), lit(b), lit(" ")),
               concat(lit(" "), lit(a + b), lit(" "))))
         }.cache()
-        syms = cutLineage(syms, rounds, Int.MaxValue)
+        syms = Lineage.cutEvery(syms, rounds)
         safe.foreach { case (a, b, f) => done += 1; out += ((done.toLong, a, b, f)) }
       }
     }

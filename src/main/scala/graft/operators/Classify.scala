@@ -306,11 +306,11 @@ object Classify {
     // scans, the model join, the per-doc argmax window): the r14 plan
     // dump shows 5 parquet scan subtrees / 236 Exchanges. Aggregates
     // are not exchanges, so nothing above conf's groupBy is reused.
-    // localCheckpoint truncates all of them to one ≤|classes|²-row
+    // The cut truncates all of them to one ≤|classes|²-row
     // leaf; the scoring pipeline runs exactly once.
     val conf = nbScoreOf(docs)
       .groupBy(col("actual"), col("predicted")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val ma = conf.groupBy(col("actual")).agg(sum(col("n")).as("n_actual"))
       .withColumnRenamed("actual", "cls")
     val mp = conf.groupBy(col("predicted")).agg(sum(col("n")).as("n_predicted"))

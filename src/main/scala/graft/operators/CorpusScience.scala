@@ -370,10 +370,10 @@ object CorpusScience {
     // without a cut the whole corpus-proportional skipgram pass rides
     // into each reference (a 5,272-line / 302-Exchange plan re-analyzed
     // per run). It is vocabulary-pair-sized (text-free after the
-    // filter), so one localCheckpoint bounds both the work and the plan.
+    // filter), so one lineage cut bounds both the work and the plan.
     val edges = counts.select(col("center").as("src"), col("context").as("dst"),
       col("n").cast("double").as("w"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     // symmetric edges: every endpoint appears as a src — distinct src
     // IS the node universe; words with no surviving edge carry no rank
     val nodes = edges.select(col("src").as("node")).distinct()

@@ -75,7 +75,7 @@ object Curate {
     // and — via the old keep/lose filter it replaces — the final
     // output), and deriving it lazily re-instantiated the keeps
     // aggregate and the whole LSH band pipeline per reference. It is
-    // doc-count rows of ids (never text), so ONE localCheckpoint
+    // doc-count rows of ids (never text), so ONE lineage cut
     // materializes it once and every dedup branch then joins a bounded
     // in-memory leaf. Checkpointing `annotated` as well was measured
     // WORSE (3.33 vs 2.74 s solo at sf0.1): the eager annotate job
@@ -90,7 +90,7 @@ object Curate {
     val survivorIds = annotated.select("doc_id")
       .join(keeps, Seq("doc_id"), "left_semi")
       .join(losers, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+      .transform(Lineage.cut)
     // maximal duplicated spans among SURVIVORS: the window-hash table
     // drops text at the scan, so restricting it to survivors is an
     // id-on-16-byte-rows semi join — never a text join

@@ -55,7 +55,7 @@ object Dedup {
   def nearDupClusters(pairs: DataFrame, maxIter: Int = 50): DataFrame = {
     // r15: (a) both directions come from ONE per-row explode — the old
     // two-branch union executed the pair-candidate subtree once per
-    // direction when the cache materialized; (b) localCheckpoint, not
+    // direction when the cache materialized; (b) a lineage cut, not
     // cache: every iteration's logical plan then references a LEAF
     // instead of embedding the whole LSH/Jaccard pair derivation —
     // dedup_clusters' formatted plan shrinks 12,282 → ~300 lines, and
@@ -64,7 +64,7 @@ object Dedup {
         struct(col("doc_a").as("src"), col("doc_b").as("dst")),
         struct(col("doc_b").as("src"), col("doc_a").as("dst")))).as("e"))
       .select(col("e.src"), col("e.dst"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     var labels  = edges.select(col("src").as("id")).distinct()
       .withColumn("label", col("id")).cache()
     // ONE action per iteration: the changed-count materializes the
@@ -79,45 +79,19 @@ object Dedup {
     while (changed > 0 && i < maxIter) {
       val nbrMin = edges.join(labels, col("dst") === col("id"))
         .groupBy(col("src")).agg(min(col("label")).as("nbr_min"))
-      // Every 5 rounds, cut the lineage. Reason that always holds:
-      // the LOGICAL plan doubles every iteration (cache only
-      // short-circuits physical re-execution), so plan analysis and
-      // per-action plan strings grow 2^i — the checkpoint resets the
-      // plan to a leaf, capping growth at 2^5. Fault tolerance depends
-      // on WHICH checkpoint: with a checkpoint dir configured
-      // (sc.setCheckpointDir — any production run) this is a RELIABLE
-      // checkpoint and replay after executor loss is bounded to ≤5
-      // rounds; without one it falls back to localCheckpoint, which
-      // stores executor-LOCAL blocks — losing an executor then fails
-      // the job rather than replaying from iteration 0, an accepted
-      // trade in local/test mode where there is no HDFS to write to.
+      // Every 5 rounds, cut the lineage: the LOGICAL plan doubles every
+      // iteration (cache only short-circuits physical re-execution), so
+      // the cut resets it to a leaf and caps growth at 2^5.
       val stepped = labels.join(nbrMin, col("id") === col("src"), "left")
         .select(col("id"), col("label").as("old_label"),
           least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-      val cut = i % 5 == 4
-      val sc = stepped.sparkSession.sparkContext
-      val updated =
-        (if (cut && sc.getCheckpointDir.isDefined) {
-          // persist first: eager checkpoint runs TWO jobs (materialize +
-          // reliable write) and would otherwise recompute the iteration's
-          // join from lineage for the second one. Checkpoint files live
-          // until app end unless spark.cleaner.referenceTracking
-          // .cleanCheckpoints=true — set it in long-running deployments.
-          val persisted = stepped.persist()
-          val cp = persisted.checkpoint()
-          persisted.unpersist(blocking = false)
-          cp
-        } else if (cut) stepped.localCheckpoint()
-         else stepped).cache()
+      val updated = Lineage.cutEvery(stepped, i + 1).cache()
       changed = updated.filter(col("label") < col("old_label")).count()
       prevCache.unpersist(blocking = false)
       prevCache = updated
       labels = updated.select(col("id"), col("label"))
       i += 1
     }
-    // (checkpoint blocks are released by the ContextCleaner once the
-    // DataFrame is unreachable — no explicit unpersist exists for
-    // localCheckpoint; acceptable for a bounded edge table)
     // A component with diameter > maxIter would exit with split labels
     // (multiple "canonical" docs per real cluster) — refuse to return
     // a silently-wrong clustering.
@@ -762,12 +736,6 @@ object Dedup {
 
   private def seedHashSql(base: String, i: Int): String =
     s"($base * ${aCoef(i)} + ${bCoef(i)}) % $MinhashP"
-
-  /** Shingles with their 32-bit base hash (low 32 bits of the 60-bit
-    * shingle hash — no second digest).
-    */
-  private def shingleBases(t: Tables, n: Int): DataFrame =
-    shingles(t, n).withColumn("base", col("shingle_hash") % 4294967296L)
 
   /** Wide MinHash signature: one row per doc, k minhash columns m0..mk-1.
     * A single groupBy(doc) shuffle with map-side partial mins — the

@@ -94,24 +94,11 @@ object Graph {
     var ranks = uniformRanks(nodes, nTotal)
     for (i <- 1 to iters) {
       ranks = sweep(ew, nodes, nTotal, ranks, d)
-      // Lineage cut every 5 sweeps (the Dedup.nearDupClusters cadence):
-      // each sweep nests the previous plan, so analysis cost and the
-      // re-derivation of edges/outw grow with iters — fine at the
-      // default 3, fatal for a library caller at iters ≈ 20. A reliable
-      // checkpoint when a checkpoint dir is configured (bounded replay
-      // after executor loss); localCheckpoint otherwise (local/test
-      // mode trade — executor loss fails the job instead of replaying
-      // from sweep 0). Skipped on the final sweep: the caller's action
-      // materializes it anyway.
-      if (i % 5 == 0 && i < iters) {
-        ranks =
-          if (ranks.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-            val persisted = ranks.persist()
-            val cp = persisted.checkpoint()
-            persisted.unpersist(blocking = false)
-            cp
-          } else ranks.localCheckpoint()
-      }
+      // Lineage cut every 5 sweeps: each sweep nests the previous plan,
+      // so analysis cost and the re-derivation of edges/outw grow with
+      // iters — fine at the default 3, fatal for a library caller at
+      // iters ≈ 20.
+      ranks = Lineage.cutEvery(ranks, i, iters)
     }
     topKRanks(ranks, topK)
   }
@@ -175,13 +162,7 @@ object Graph {
       delta = next.join(ranks.select(col("node"), col("rank").as("prev")), "node")
         .agg(sum(abs(col("rank") - col("prev"))).as("d")).head().getDouble(0)
       sweeps += 1
-      if (sweeps % 5 == 0) {
-        val cut =
-          if (next.sparkSession.sparkContext.getCheckpointDir.isDefined) next.checkpoint()
-          else next.localCheckpoint()
-        next.unpersist(blocking = false)
-        next = cut
-      }
+      next = Lineage.cutEvery(next, sweeps)
       ranks.unpersist(blocking = false)
       ranks = next
     }
@@ -217,15 +198,15 @@ object Graph {
     * by graph diameter.
     */
   def kCoreOf(edges: DataFrame, k: Int, iters: Int = 6): DataFrame = {
-    // localCheckpoint, NOT cache + unpersist: the peel loop runs
+    // A lineage cut, NOT cache + unpersist: the peel loop runs
     // eagerly at build time, so the old `und.unpersist` at the end of
     // this method fired BEFORE the returned plan ever executed — the
     // final degree pass re-derived the whole orders⋈lineitem distinct
     // union from scratch (measured: the two re-derivation scan stages
     // were the query's largest, ~1.5 s of its 4.6 s at sf0.1). The
     // checkpoint materializes the edge table once, every peel round
-    // and the final pass read the materialized blocks, and the blocks
-    // free with the RDD when the query's lineage is collected.
+    // and the final pass read the materialized blocks (their lifetime
+    // is the Lineage scaladoc's).
     // r15: one per-row explode instead of a two-branch unionAll — the
     // union made each direction its own subtree, so the orders⋈lineitem
     // distinct executed once PER DIRECTION inside this checkpoint job
@@ -234,7 +215,7 @@ object Graph {
         struct(col("a"), col("b")),
         struct(col("b").as("a"), col("a").as("b")))).as("e"))
       .select(col("e.a"), col("e.b"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     var alive = und.select(col("a").as("node")).distinct().cache()
     var prev = alive.count()
     var r = 0
@@ -337,7 +318,7 @@ object Graph {
     */
   def hitsOf(edges0: DataFrame, iters: Int = 3, topK: Int = 20): DataFrame = {
     // every half-sweep references the edge table: 2·iters re-derivations
-    // of the upstream join without a cut. One local checkpoint
+    // of the upstream join without a cut. One lineage cut
     // materializes it once (node-pair rows, fixed width) — the same
     // trade pageRankConverged makes with its cache
     // NOTE (r14 optimization round, negative result kept): pinning two
@@ -356,7 +337,7 @@ object Graph {
     // deserialized-block cache reads are memory-bandwidth-bound, and
     // 32-way fan-out multiplies block-manager/deserialization work
     // instead of splitting it. 6-wide cache scans are the cheap form.
-    val edges = edges0.localCheckpoint()
+    val edges = edges0.transform(Lineage.cut)
     val hubs = edges.select(col("hub")).distinct()
     var hub = hubs.join(hubs.agg(count(lit(1)).as("n")))
       .select(col("hub"), (lit(1.0) / col("n")).as("h"))
@@ -454,7 +435,7 @@ object Graph {
     * triangle enumeration never shuffles.
     */
   def trianglesOf(edges: DataFrame, maxEdges: Int): DataFrame = {
-    // localCheckpoint BEFORE the 3-way broadcast self-join: `e` is
+    // Lineage cut BEFORE the 3-way broadcast self-join: `e` is
     // referenced three times (e1⋈e2⋈e3) plus the degree rollup, and
     // without a cut each broadcast re-executed the whole upstream
     // pair aggregate + top-E TakeOrdered (measured: the ~5 s ×8.7M-
@@ -463,7 +444,7 @@ object Graph {
     // build from those rows for free.
     val e = broadcast(
       edges.orderBy(col("n_common").desc, col("s1"), col("s2")).limit(maxEdges)
-        .select("s1", "s2").localCheckpoint())
+        .select("s1", "s2").transform(Lineage.cut))
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.s2") === col("e2.s1"))
       .join(e.as("e3"),

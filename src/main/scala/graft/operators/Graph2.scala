@@ -58,10 +58,10 @@ object Graph2 {
     */
   def bfsHopsOf(edges0: DataFrame, nodes: DataFrame, seeds: DataFrame,
       hops: Int): DataFrame = {
-    // every sweep references the edge table — one local checkpoint
+    // every sweep references the edge table — one lineage cut
     // materializes the upstream join/distinct once instead of `hops`
     // times (the hitsOf lesson, same trade)
-    val edges = edges0.localCheckpoint()
+    val edges = edges0.transform(Lineage.cut)
     var dist = seeds.select(col("node"), lit(0L).as("d"))
     var frontier = dist.select("node")
     for (i <- 1 to hops) {
@@ -79,10 +79,10 @@ object Graph2 {
       // dist_i is referenced TWICE downstream (next sweep's union AND
       // its frontier filter) — without a cut each level's subtree
       // evaluates twice per consumer, doubling per sweep; one
-      // node-sized local checkpoint per sweep keeps the plan flat
+      // node-sized lineage cut per sweep keeps the plan flat
       dist = dist.unionAll(candidates)
         .groupBy("node").agg(min(col("d")).as("d"))
-        .localCheckpoint()
+        .transform(Lineage.cut)
       frontier = dist.filter(col("d") === i).select("node")
     }
     val reached = dist.groupBy(col("d").as("hop")).agg(count(lit(1)).as("n_nodes"))
@@ -170,7 +170,7 @@ object Graph2 {
     */
   def labelPropLabelsOf(edges0: DataFrame, nodes: DataFrame,
       sweeps: Int): DataFrame =
-    labelPropLabelsOfCp(edges0.localCheckpoint(), nodes, sweeps)
+    labelPropLabelsOfCp(edges0.transform(Lineage.cut), nodes, sweeps)
 
   /** [[labelPropLabelsOf]] over an ALREADY-materialized edge table —
     * so a composer that also consumes the edges ([[modularityOf]]'s
@@ -362,7 +362,7 @@ object Graph2 {
     // method's own dTot/deg/intra passes — previously the latter three
     // re-derived the orders⋈lineitem distinct union from scratch while
     // the sweeps used their own checkpointed copy.
-    val edges = edges0.localCheckpoint()
+    val edges = edges0.transform(Lineage.cut)
     // labels feed THREE consumers (both intra-join sides + the degree
     // rollup) — but unlike hitsOf/bfsHops, a localCheckpoint of LABELS
     // is a measured LOSS (A/B at sf0.1: 5.0 s plain vs 7.0 s

@@ -367,10 +367,10 @@ object InvertedIndex {
     // side + broadcast side), and a TakeOrdered result is not an
     // exchange — nothing is reused, so the WHOLE round-2 BM25 pass
     // (tokenize scan included) executed once per side. One ≤k-row
-    // localCheckpoint makes the second reference free.
+    // lineage cut makes the second reference free.
     val top = bm25ScoresDf(docs, terms2, k1, b)
       .orderBy(col("bm25").desc, col("doc_id")).limit(k)
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val a = top.as("a"); val bb = top.as("b")
     a.join(broadcast(bb),
         col("b.bm25") > col("a.bm25") ||

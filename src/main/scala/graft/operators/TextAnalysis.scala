@@ -234,7 +234,7 @@ object TextAnalysis {
     // tighter than the old cached-pass/recompute split, which leaned
     // on the 6dp rounding for cross-computation consistency).
     val lp = unigramLogProb(t).select(col("doc_id"), col("avg_logprob"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val sorted = lp
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions,
         col("avg_logprob").desc, col("doc_id").asc)

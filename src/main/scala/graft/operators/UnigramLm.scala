@@ -216,7 +216,7 @@ object UnigramLm {
     // aggregate execute once inside trainOf's persist AND once more
     // for the charset pass below.
     val words = WordPipeline.tokens(t).groupBy("word").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val inv = trainOf(words, seedSize = seedSize)
       .select(col("piece"), col("count").cast("long"), col("log_prob"))
       .as[(String, Long, Double)].collect()
@@ -265,7 +265,7 @@ object UnigramLm {
     // because the groupBy below discards any order (plan otherwise
     // keeps the range exchange + sort under the aggregate)
     val words = WordPipeline.tokens(t).groupBy("word").agg(count(lit(1)).as("freq"))
-      .localCheckpoint()
+      .transform(Lineage.cut)
     val enc = encodeRawOf(words, trainOf(words))
     enc.groupBy(col("word"))
       .agg(

@@ -133,7 +133,7 @@ object WordPiece {
             concat(lit(" "), lit(a), lit(" "), lit(b), lit(" ")),
             concat(lit(" "), lit(composed), lit(" "))))
           .cache()
-        syms = cutLineage(syms, i, merges)
+        syms = Lineage.cutEvery(syms, i, merges)
       }
     }
     if (retired != null) retired.unpersist(blocking = false)
@@ -143,20 +143,6 @@ object WordPiece {
       .toDF("rank", "lhs", "rhs", "pair_freq", "lhs_freq", "rhs_freq")
       .orderBy("rank")
   }
-
-  /** The [[Bpe]] 5-round lineage-cut cadence — each round nests the
-    * previous plan; unbounded nesting blows up plan analysis long
-    * before it slows the data.
-    */
-  private def cutLineage(syms: DataFrame, round: Int, last: Int): DataFrame =
-    if (round % 5 == 0 && round < last) {
-      val prev = syms
-      val cut =
-        if (syms.sparkSession.sparkContext.getCheckpointDir.isDefined) syms.checkpoint()
-        else syms.localCheckpoint()
-      prev.unpersist(blocking = false)
-      cut
-    } else syms
 
   /** DuckDB twin: the rounds unrolled as CTEs ([[Bpe.bpeTrainSql]]
     * pattern). w/u CTEs are MATERIALIZED — each is referenced more

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Dedup, WordPipeline}
+import TestSpark.{anyFile, withCheckpointDir}
 
 /** The testdata corpus is clean; these cover what it can't — empty and
   * whitespace-only docs, duplicates, short docs — through the
@@ -19,12 +20,6 @@ class EdgeCaseSpec extends AnyFunSuite {
     (3L, "one"),
     (4L, "Hello  world  hello"),
     (5L, "a b c a b c")).toDF("doc_id", "text")
-
-  /** True once anything under `f` is a regular file (Spark creates the
-    * checkpoint dir's subdirectories eagerly; files mean a checkpoint).
-    */
-  private def anyFile(f: java.io.File): Boolean =
-    f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
 
   test("tokensOf handles empty and whitespace-only docs") {
     val toks = WordPipeline.tokensOf(docs).collect()
@@ -81,15 +76,13 @@ class EdgeCaseSpec extends AnyFunSuite {
   }
 
   test("nearDupClusters takes the RELIABLE checkpoint path when a dir is configured") {
-    val dir = TestSpark.tempDir("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
+    withCheckpointDir("graft-ckpt") { dir =>
       val pairs = (0L until 12L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
       val labels = Dedup.nearDupClusters(pairs, maxIter = 20)
       assert(labels.collect().forall(_.getLong(1) == 0L))
       // reliable checkpoint files must actually exist under the dir
-      assert(anyFile(new java.io.File(dir)), "no reliable checkpoint written")
-    } finally spark.sparkContext.setCheckpointDir(null)
+      assert(anyFile(dir), "no reliable checkpoint written")
+    }
   }
 
   test("fuzzyPairs finds near-identical names within blocks only") {
@@ -264,12 +257,10 @@ class EdgeCaseSpec extends AnyFunSuite {
     // no checkpoint dir: the cuts are localCheckpoints
     check("local", ranks())
     // with a checkpoint dir: the persist → checkpoint → unpersist branch
-    val dir = TestSpark.tempDir("graft-pagerank-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
+    withCheckpointDir("graft-pagerank-ckpt") { dir =>
       check("reliable", ranks())
-      assert(anyFile(new java.io.File(dir)), "no reliable checkpoint written")
-    } finally spark.sparkContext.setCheckpointDir(null)
+      assert(anyFile(dir), "no reliable checkpoint written")
+    }
   }
 
   test("pageRankConverged: stops before maxIters and equals the fixed form at the stop count") {
@@ -295,6 +286,14 @@ class EdgeCaseSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     got.foreach { case (n, r) =>
       assert(math.abs(oneMore(n) - r) <= 1e-5 + 1e-6, s"node $n moved ${math.abs(oneMore(n) - r)}")
+    }
+    // the reliable cuts (checkpoint dir set) change nothing
+    withCheckpointDir("graft-pagerank-conv-ckpt") { dir =>
+      val (conv2, sweeps2) = graft.operators.Graph.pageRankConvergedWithSweeps(
+        edges, nodes, maxIters = 40, d = 0.5, tol = 1e-5)
+      assert(sweeps2 == sweeps)
+      assert(conv2.collect().map(r => (r.getLong(0), r.getDouble(1))).toList == got)
+      assert(anyFile(dir), "no reliable checkpoint written")
     }
   }
 
@@ -438,9 +437,16 @@ class EdgeCaseSpec extends AnyFunSuite {
     // with in-core degree 3.
     val clique = for (a <- Seq(0L, 2L, 4L, 6L); b <- Seq(0L, 2L, 4L, 6L) if a < b) yield (a, b)
     val edges = (clique ++ Seq((6L, 8L), (8L, 10L))).toDF("a", "b")
-    val got = graft.operators.Graph.kCoreOf(edges, k = 3).collect()
+    def core() = graft.operators.Graph.kCoreOf(edges, k = 3).collect()
       .map(r => (r.getAs[Long]("node"), r.getAs[Long]("degree"))).toMap
+    val got = core()
     assert(got == Map(0L -> 3L, 2L -> 3L, 4L -> 3L, 6L -> 3L), s"got $got")
+    // kCoreOf's one-shot edge cut follows the same policy as the loops:
+    // reliable once a checkpoint dir is set
+    withCheckpointDir("graft-kcore-ckpt") { dir =>
+      assert(core() == got)
+      assert(anyFile(dir), "no reliable checkpoint written")
+    }
   }
 
   test("kCoreOf: fixpoint is maximal — every survivor has >= k in-core neighbors, no removed node does") {

@@ -23,6 +23,23 @@ object TestSpark {
     dir
   }
 
+  /** Run `body` with the shared session's checkpoint dir set to a fresh
+    * [[tempDir]], so lineage cuts take the reliable branch; the dir is
+    * unset again afterwards, whatever `body` does.
+    */
+  def withCheckpointDir[T](prefix: String)(body: java.io.File => T): T = {
+    val dir = tempDir(prefix).toFile
+    spark.sparkContext.setCheckpointDir(dir.toString)
+    try body(dir)
+    finally spark.sparkContext.setCheckpointDir(null)
+  }
+
+  /** True once anything under `f` is a regular file (Spark creates the
+    * checkpoint dir's subdirectories eagerly; files mean a checkpoint).
+    */
+  def anyFile(f: java.io.File): Boolean =
+    f.isFile || Option(f.listFiles).exists(_.exists(anyFile))
+
   /** Stop a continuously-triggering query OFF the commit path (VERDICT
     * r12 #3): a stop() that lands mid-batch races the state store
     * commit and the killed tasks log CANNOT_WRITE_STATE_STORE.

@@ -104,6 +104,13 @@ class IncrementalSpec extends AnyFunSuite {
     val batM = Bpe.bpeTrainBatched(tt, merges = 6).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toList
     assert(batM == seqM, s"batched diverged on adversarial corpus:\nbat=$batM\nseq=$seqM")
+    // the round-5 cut taken reliably (checkpoint dir set) changes nothing
+    TestSpark.withCheckpointDir("bpeadv-ckpt") { ckpt =>
+      val relM = Bpe.bpeTrain(tt, merges = 6).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toList
+      assert(relM == seqM, s"reliable cut diverged:\nrel=$relM\nseq=$seqM")
+      assert(TestSpark.anyFile(ckpt), "no reliable checkpoint written")
+    }
   }
 
   test("bpeTrainFast: sequential-identical on an independent-pair corpus; sublinear rounds + near-sequential encode quality on the real one") {

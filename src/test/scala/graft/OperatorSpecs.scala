@@ -534,7 +534,6 @@ class SinksSpec extends AnyFunSuite {
 
   test("lshEval: counts compose the two gated queries (identical-corpus sanity)") {
     import spark.implicits._
-    val spark2 = spark
     // identical docs → exact pair at jaccard 1.0, LSH must surface it
     val docs = Seq(
       (1L, "alpha beta gamma delta epsilon zeta eta theta"),

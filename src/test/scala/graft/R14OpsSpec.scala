@@ -208,7 +208,7 @@ class DpCountsSpec extends AnyFunSuite {
 class CdcChunksSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
-  private def cutsOf(s: String, w: Int = 8, b: Long = 31L, d: Long = 64L): Seq[Int] = {
+  private def cutsOf(s: String, w: Int = 8, b: Long = 31L, d: Long): Seq[Int] = {
     import spark.implicits._
     Seq(s).toDF("t")
       .select(graft.functions.CdcCutsExpr.cuts(

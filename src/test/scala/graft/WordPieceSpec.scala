@@ -98,6 +98,11 @@ class WordPieceSpec extends AnyFunSuite {
     import s.implicits._
     val corpus = words("hello" -> 50L, "help" -> 30L, "hollow" -> 20L)
     val merges = WordPiece.wpTrainOf(corpus, merges = 6).collect()
+    // the round-5 cut taken reliably (checkpoint dir set) changes nothing
+    TestSpark.withCheckpointDir("wp-ckpt") { ckpt =>
+      assert(WordPiece.wpTrainOf(corpus, merges = 6).collect().toSeq == merges.toSeq)
+      assert(TestSpark.anyFile(ckpt), "no reliable checkpoint written")
+    }
     // vocab = every single-symbol piece of the corpus (both positions)
     // + the composed symbol of each merge, in training order
     val chars = "helopw".toSeq.map(_.toString)
